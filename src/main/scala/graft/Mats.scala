@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import scala.util.control.NonFatal
 
 /** Per-key materialization bookkeeping (optimization rounds 18/19).
   *
@@ -44,14 +46,18 @@ object Mats {
   private val dirBytes =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Total bytes of the source parquet dir (filesystem metadata only,
-    * memoized per path). */
-  def inputBytes(dir: String): Long =
+  /** Total bytes under the source data dir (filesystem metadata only,
+    * memoized per path). Sized through the Hadoop FileSystem API, so an
+    * `hdfs://`, `s3a://` or `file:` URI sizes like a bare local path; a size
+    * that cannot be read counts as unbounded — at an unknown scale,
+    * materializing is the safe side. */
+  def inputBytes(s: SparkSession, dir: String): Long =
     dirBytes.computeIfAbsent(dir, { d =>
-      def size(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
-        else f.length()
-      java.lang.Long.valueOf(size(new java.io.File(d)))
+      val p = new Path(d)
+      val n =
+        try p.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(p).getLength
+        catch { case NonFatal(_) => Long.MaxValue }
+      java.lang.Long.valueOf(n)
     }).longValue()
 
   private def threshold(s: SparkSession): Long =
@@ -61,7 +67,7 @@ object Mats {
   /** True when the source data is large enough that materializing a
     * multiply-referenced intermediate beats re-running its upstream. */
   def materializeAt(s: SparkSession, d: String): Boolean =
-    inputBytes(d) >= threshold(s)
+    inputBytes(s, d) >= threshold(s)
 
   /** Record the checkpoint RDD(s) backing `df` for release at the next key
     * boundary. */

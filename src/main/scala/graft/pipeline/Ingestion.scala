@@ -18,8 +18,11 @@ import org.apache.spark.sql.streaming.Trigger
   * ships in this environment.
   *
   * Scale posture: every write path is a parallel DataFrame write — the
-  * runner never collects; merge is one shuffle on the merge keys (or a
-  * broadcast anti-join when the source batch is small, left to AQE).
+  * runner never collects. A merge is an anti-join of the table against the
+  * batch's distinct keys (broadcast when the batch is small, the usual
+  * case; left to the planner and AQE), a hash spread of the batch alone on
+  * the merge keys, and a union with the surviving rows, which keep the
+  * table's file layout: the table itself is never shuffled.
   */
 sealed trait WriteMode
 object WriteMode {
@@ -39,8 +42,10 @@ object WriteMode {
     *     the "source is the full truth, drop stale rows" sync shape).
     *
     * Both default to None = plain upsert, byte-compatible with the
-    * pre-existing behavior. Still ONE shuffle on the merge keys: the
-    * clauses are filters on the two union branches, not extra joins. */
+    * pre-existing behavior. The clauses are filters on the two union
+    * branches (batch upserts, surviving table rows), not extra joins, so
+    * they add no shuffle: the plan stays the anti-join on the batch's keys
+    * plus the batch-only hash spread ([[IngestionRunner]]'s merge). */
   final case class Merge(keys: Seq[String],
       deleteOnMatch: Option[String] = None,
       deleteNotMatchedBySource: Option[String] = None) extends WriteMode
@@ -427,97 +432,40 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
   private def fsFor(p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Rows written by the write(s) executed inside `body`, summed from the
-    * tasks' output metrics (`recordsWritten` — what the UI's "output"
-    * column shows). The previous implementation ended every ingest with
-    * `spark.table(target).count()` — a full rescan of the just-written (and
-    * ever-growing) target per append, which at 100 TB doubles the read cost
-    * of each ingest just to return a Long.
-    *
-    * Task metrics, not the SQL `numOutputRows` metric: under AQE a V1 file
-    * write's executed plan roots at AdaptiveSparkPlanExec, a leaf node whose
-    * stages (and their metrics) are invisible to plan traversal — task-level
-    * output metrics count the same rows for every plan shape. The count is
-    * scoped to THIS call's jobs via a unique job group (a shared session may
-    * be running other writes concurrently; an unfiltered listener would sum
-    * theirs too). Delivery is async, but the listener bus is FIFO: a job's
-    * TaskEnd events always precede its JobEnd, so once every started group
-    * job has its end event the task counts are complete — the wait exits on
-    * that signal (plus a short stability window against a start/end pair
-    * still queued together), not on a long fixed counter-quiesce that both
-    * stalled every write ~500 ms and could undercount under bus lag.
-    * Retried tasks could in principle double-count; file-committer output
-    * metrics are only reported for committed attempts. */
-  private def withWrittenRowCount(body: => Unit): Long = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val group = s"graft-ingest-${java.util.UUID.randomUUID()}"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val rows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            group == j.properties.getProperty("spark.jobGroup.id")) {
-          jobs.add(j.jobId)
-          j.stageInfos.foreach(si => stages.add(si.stageId))
-        }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (jobs.contains(j.jobId)) ended.add(j.jobId)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) {
-          val m = e.taskMetrics
-          if (m != null) rows.addAndGet(m.outputMetrics.recordsWritten)
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "graft ingest write", interruptOnCancel = false)
-    try {
-      body
-      var stableSince = System.nanoTime()
-      var lastSeen = (-1, -1)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      // `jobs.isEmpty` guards the zero-jobs exit: every write body launches
-      // at least one job, so an empty set means the listener bus has not
-      // delivered the JobStart yet — exiting on the stability window alone
-      // would report rows=0 on a lagging bus. The 30 s deadline remains the
-      // escape hatch if a body ever legitimately runs no job.
-      while (System.nanoTime() < deadline && {
-        val seen = (jobs.size, ended.size)
-        if (seen != lastSeen) { lastSeen = seen; stableSince = System.nanoTime() }
-        jobs.isEmpty || jobs.size != ended.size ||
-          System.nanoTime() - stableSince < 100L * 1000 * 1000
-      }) Thread.sleep(10)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    rows.get
+  /** Runs `write` on `df` and returns the rows it wrote, counted by an
+    * [[org.apache.spark.sql.Observation]] riding the written plan itself:
+    * no rescan of the target (at 100 TB a post-write `count()` would double
+    * each ingest's read cost), no listener, no job group, and no wait
+    * beyond the write's own completion. The count is exact for every plan
+    * shape the runner writes, AQE included, and is scoped to this one
+    * write — only `write`'s own execution reports into the observation. */
+  private def countingWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = new org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** A5 (framework.py:154-175): append/overwrite, partitioned, managed
     * (saveAsTable) or external (save + register). */
   private def writeBatch(c: IngestionConfig, df: DataFrame, m: WriteMode): Long = {
     val mode = if (m == WriteMode.Overwrite) "overwrite" else "append"
-    var w = df.write.format("parquet").mode(mode)
-    if (c.partitionBy.nonEmpty) w = w.partitionBy(c.partitionBy: _*)
-    // Fail-gated DIRECT writes need a job-atomic committer: algorithm v2
-    // (and direct-write cloud committers) publish part-files per task, so
-    // tasks finishing before the raise_error would leave partial batch
-    // data visible in an append target. The option lands in this write's
-    // hadoop conf only; the versioned merge/optimize paths don't need it
-    // (fresh-dir stage + pointer-swap publish).
-    if (c.constraints.nonEmpty && c.onViolation == ViolationAction.Fail)
-      w = w.option("mapreduce.fileoutputcommitter.algorithm.version", "1")
-    val n = withWrittenRowCount {
+    val n = countingWrite(df) { observed =>
+      var w = observed.write.format("parquet").mode(mode)
+      if (c.partitionBy.nonEmpty) w = w.partitionBy(c.partitionBy: _*)
+      // Fail-gated DIRECT writes need a job-atomic committer: algorithm v2
+      // (and direct-write cloud committers) publish part-files per task, so
+      // tasks finishing before the raise_error would leave partial batch
+      // data visible in an append target. The option lands in this write's
+      // hadoop conf only; the versioned merge/optimize paths don't need it
+      // (fresh-dir stage + pointer-swap publish).
+      if (c.constraints.nonEmpty && c.onViolation == ViolationAction.Fail)
+        w = w.option("mapreduce.fileoutputcommitter.algorithm.version", "1")
       c.targetPath match {
-        case Some(p) =>
-          w.save(p)
-          registerExternal(c, p, Some(df.schema))
+        case Some(p) => w.save(p)
         case None => w.saveAsTable(c.fullTableName)
       }
     }
+    c.targetPath.foreach(p => registerExternal(c, p, Some(df.schema)))
     applyMetadata(c)
     optimizePostWrite(c)
     n
@@ -645,11 +593,21 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
   }
 
   /** A7 (framework.py:211-231) without Delta: matched rows take the source
-    * version, unmatched target rows survive — source ∪ (target anti source),
-    * one shuffle on the keys; bootstraps an empty target like
-    * framework.py:218's limit(0) write. The rewrite goes through
-    * stage/commit above, so the swap is atomic and the plan never reads the
-    * files it is replacing.
+    * version, unmatched target rows survive — source ∪ (target anti source);
+    * bootstraps an empty target like framework.py:218's limit(0) write.
+    * The plan:
+    *
+    *   - survivors: the table anti-joined against the batch's distinct
+    *     keys — a broadcast of the keys when the batch is small, so the
+    *     table is scanned in place and keeps its file layout;
+    *   - upserts: the batch alone, hash-spread on the merge keys, so the
+    *     bootstrap load writes balanced files even from a one-row-group
+    *     landing file, and a later batch costs one small shuffle;
+    *   - the stage write of their union runs one task per survivor split
+    *     plus the batch's (AQE-coalesced) partitions.
+    *
+    * The rewrite goes through stage/commit above, so the swap is atomic
+    * and the plan never reads the files it is replacing.
     *
     * Schema evolution on the merge path (framework.py:15's promise, Delta
     * `autoMerge` analog): a source batch that GAINED a column merges via
@@ -676,13 +634,19 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
     // is EXCLUDED from the upsert branch but still CLAIMS its key (so the
     // matching target row is dropped by the anti join and an unmatched
     // tombstone is a no-op); deleteNotMatchedBySource filters the
-    // surviving-target branch. Both are filters on existing branches —
-    // the plan keeps the single shuffle on the merge keys. `IS NOT TRUE`
-    // (not `NOT`) so a NULL-valued predicate means clause-not-satisfied —
-    // the row upserts/survives, matching Delta's `WHEN … AND <cond> THEN
-    // DELETE` semantics; a bare NOT would silently delete NULL rows.
+    // surviving-target branch. Both are filters on existing branches, not
+    // extra joins. `IS NOT TRUE` (not `NOT`) so a NULL-valued predicate
+    // means clause-not-satisfied — the row upserts/survives, matching
+    // Delta's `WHEN … AND <cond> THEN DELETE` semantics; a bare NOT would
+    // silently delete NULL rows.
+    //
+    // Only the batch is hash-spread (see the plan above): a landing file is
+    // often one file with one row group, which no scan can split, and
+    // without the spread the bootstrap load would write the table as one
+    // file that every later rewrite's stage write reads on one core.
     val upserts = m.deleteOnMatch
       .map(cond => source.filter(s"($cond) IS NOT TRUE")).getOrElse(source)
+      .repartition(keys.map(col): _*)
     val survivors0 =
       target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
     val survivors = m.deleteNotMatchedBySource
@@ -693,7 +657,7 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
     var staged: Path = null
     // only the stage write is counted — the legacy path's saveAsTable
     // re-write of the staged rows is the commit, not more written rows
-    val n = withWrittenRowCount { staged = stageVersion(c, merged) }
+    val n = countingWrite(merged) { observed => staged = stageVersion(c, observed) }
     if (partitioned) legacyRewriteFromStage(c, staged)
     else if (target.columns.toSeq != merged.columns.toSeq) {
       // evolved: SET LOCATION would keep the old column set — drop and
@@ -741,11 +705,8 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val gated = gateConstraints(c, batch)
             try {
-              val obs = new org.apache.spark.sql.Observation()
-              gated.clean
-                .observe(obs, count(lit(1)).as("n"))
-                .write.mode("append").parquet(target)
-              cleanRows.addAndGet(obs.get("n").asInstanceOf[Long])
+              cleanRows.addAndGet(countingWrite(gated.clean)(
+                _.write.mode("append").parquet(target)))
               // publish after the clean append, inside the micro-batch —
               // the batch's checkpoint commit still follows, hence the
               // documented at-least-once quarantine delivery

@@ -1128,7 +1128,7 @@ object StreamOps {
   //     session could still receive events: a straddling session's last
   //     first-half event L satisfies L > mid - gap, so its timer L+gap+1
   //     exceeds the first batch's closing watermark mid - gap.
-  // Three far-future sentinel rows (user -1, ignored by the processor)
+  // Two far-future sentinel rows (user -1, ignored by the processor)
   // advance the watermark past every live timer so ALL sessions flush
   // before the AvailableNow drain ends.
   private val streamTwsTimers = Op(

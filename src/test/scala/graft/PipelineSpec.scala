@@ -259,6 +259,57 @@ class PipelineSpec extends AnyFunSuite {
     assert(old.count() === 5 && old.filter(col("r_name") === "V2").count() === 0)
   }
 
+  // A landing batch is often one file with one row group (pyarrow writes it
+  // that way), which no scan can split. The merge spreads the batch on the
+  // merge keys, so every committed version is written as several files and
+  // each later rewrite's stage write runs on more than one core.
+  test("merge writes every version as balanced files from a one-row-group batch") {
+    val db = "graft_it"; val tbl = s"$db.merge_spread"
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val rows = 200000L
+    val batch1 = spark.range(rows).select(col("id").as("k"),
+      concat(lit("row-"), col("id").cast("string")).as("s"),
+      (col("id") % 97).cast("int").as("v"))
+    def landOneRowGroup(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
+      df.coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", (1L << 30).toString).parquet(dir)
+    val src1 = tmp("g_spread1_")
+    landOneRowGroup(batch1, src1)
+    val landed = new java.io.File(src1).listFiles().filter(_.getName.startsWith("part-"))
+    assert(landed.length === 1, "the landing batch must be a single file")
+    val cfg = IngestionConfig(db, "merge_spread", src1,
+      writeMode = WriteMode.Merge(Seq("k"), deleteOnMatch = Some("v < 0")),
+      retainVersions = 2)
+    val runner = new IngestionRunner(spark, cfg)
+    assert(runner.run() === Right(rows))
+    // second batch: every 50th key updates, every 500th is a tombstone
+    // (v = -1), and 1000 new keys insert
+    val batch2 = spark.range(0, rows + 1000).where(col("id") % 50 === 0 || col("id") >= rows)
+      .select(col("id").as("k"), lit("updated").as("s"),
+        when(col("id") % 500 === 0 && col("id") < rows, lit(-1)).otherwise(lit(7)).as("v"))
+    val src2 = tmp("g_spread2_")
+    landOneRowGroup(batch2, src2)
+    val reference = batch2.where(col("v") >= 0)
+      .unionByName(batch1.join(batch2.select("k"), Seq("k"), "left_anti"))
+    val expected = reference.count()
+    assert(new IngestionRunner(spark, cfg.copy(sourcePath = src2)).run() === Right(expected))
+    val root = runner.versionsRoot(cfg)
+    val conf = spark.sessionState.newHadoopConf()
+    val versions = Versioned.history(root, conf)
+    assert(versions.size === 2)
+    versions.indices.foreach { n =>
+      val dir = Versioned.versionDir(root, n, conf).get.toString
+      val filesWithRows = spark.read.parquet(dir)
+        .groupBy(input_file_name()).count().count()
+      assert(filesWithRows >= 2, s"version $n ($dir) holds $filesWithRows non-empty files")
+    }
+    val actual = spark.table(tbl)
+    assert(actual.count() === expected)
+    assert(actual.exceptAll(reference).isEmpty && reference.exceptAll(actual).isEmpty,
+      "the merged table must equal a plain-Spark upsert of the two batches")
+  }
+
   test("stream mode drains the landing dir through a checkpoint (A6)") {
     val db = "graft_it"
     spark.sql(s"DROP TABLE IF EXISTS $db.region_s")
